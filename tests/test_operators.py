@@ -436,6 +436,16 @@ def test_scored_search_merges_commit_time_stats(spark, catalog, tmp_path):
     assert n_stats == 1, "scored search did not read the stats parquets"
     assert n_scans == 2, "expected exactly one data scan + one stats scan"
 
+    # the per-segment sidecars summed by (field, term): what the merged
+    # segment's sidecar must hold however it is built
+    summed: dict = {}
+    for s in segs:
+        for r in spark.read.parquet(stats_path(config, s.file_name)).collect():
+            acc = summed.setdefault((r.field, r.term), [None, None, None])
+            for i, v in enumerate((r.df, r.n_docs, r.sum_dl)):
+                if v is not None:
+                    acc[i] = (acc[i] or 0) + v
+
     # fallback (stats removed) must produce bit-identical scores
     for s in segs:
         st.delete_tree(stats_path(config, s.file_name))
@@ -443,11 +453,17 @@ def test_scored_search_merges_commit_time_stats(spark, catalog, tmp_path):
     assert fb_stats == 0
     assert fallback == with_stats
 
-    # compaction recomputes stats for the merged segment and scoring
-    # still matches
+    # with its inputs' sidecars gone, compaction recomputes stats from
+    # the merged data: equal to the inputs' sum, and scoring still
+    # matches
     merge_segments(spark, catalog, "scored_stats")
     (merged_seg,) = catalog.segments("scored_stats")
     assert st.exists(stats_path(config, merged_seg.file_name))
+    recomputed = {
+        (r.field, r.term): [r.df, r.n_docs, r.sum_dl]
+        for r in spark.read.parquet(stats_path(config, merged_seg.file_name)).collect()
+    }
+    assert recomputed == summed
     merged, _, m_stats = run()
     assert m_stats == 1
     assert merged == with_stats

@@ -12,9 +12,12 @@ query token whose bits are not all set CANNOT be in the segment.
 
 Design points:
 
-* built DURING segment commit from the just-written data (one
-  tokenize+distinct job per text field — the same pay-once-at-commit
-  trade as the BM25 ``_stats`` sidecar);
+* scalar fields' blooms are OBSERVED on the write of the segment's
+  BM25 ``_stats`` sidecar (:func:`token_bloom_aggs`): its term rows
+  are exactly the field's distinct tokens, so the bloom costs no job
+  of its own — at commit, and at a delete-free merge whose sidecar is
+  the sum of its inputs' sidecars. Array text fields (no sidecar)
+  keep a tokenize+distinct job per field (:func:`build_token_bloom`);
 * sized from the observed vocabulary (~10 bits/token, k=4 ⇒ ~1-2%
   false positives), power-of-two capped at 2^18 bits = 32 KB; a
   segment whose vocabulary exceeds ``MAX_VOCAB`` records no bloom
@@ -30,16 +33,17 @@ Design points:
   words) is provably absent. OR branches prune only via tokens
   required by every branch; ``must_not`` never prunes.
 
-Merge: two blooms with identical geometry union by bitwise OR (no
-data reread); mismatched geometries drop the merged bloom rather
-than rebuild (conservative, and compaction already rewrites data).
+Merge: a merged scalar field's bloom is observed on the merged
+sidecar write like a commit's, so it is exact whatever the inputs'
+geometries. Array fields' blooms union by bitwise OR when every input
+has one of the same geometry and are dropped otherwise (conservative).
 """
 
 from __future__ import annotations
 
 import base64
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from toshokan_spark.operators.dedup import _poly_fold_py, poly_hash
@@ -75,10 +79,11 @@ def build_token_bloom(
     or None (empty column / vocabulary over cap).
 
     The heavy work (explode, distinct) is distributed; only the
-    distinct BIT POSITIONS are collected — bounded by ``m`` (≤ 2^18),
-    never by the corpus. When the segment carries the ingest-time
-    ``__tokens__<field>`` shadow column the build explodes it
-    directly instead of re-tokenizing the text."""
+    vocabulary size and the distinct BIT POSITIONS are collected —
+    bounded by ``MAX_BITS`` per hash, never by the corpus. When the
+    segment carries the ingest-time ``__tokens__<field>`` shadow
+    column the build explodes it directly instead of re-tokenizing
+    the text."""
     from toshokan_spark.ingest import TOKENS_PREFIX
 
     shadow = f"{TOKENS_PREFIX}{col_name}"
@@ -90,26 +95,40 @@ def build_token_bloom(
         )
     else:
         src = tokenize(F.col(col_name), tokenizer)
-    toks = (
-        written.select(F.explode(src).alias("t"))
-        .where(F.col("t").isNotNull())
-        .distinct()
-    )
-    n = toks.count()
+    toks = written.select(F.explode(src).alias("t")).distinct()
+    return observed_bloom(toks.agg(*token_bloom_aggs(F.col("t"), "b")).first(), "b")
+
+
+def token_bloom_aggs(term: Column, tag: str) -> list[Column]:
+    """Aggregates that describe a bloom over *term*, a column holding
+    each DISTINCT token once (nulls are skipped), for
+    ``DataFrame.observe``: the vocabulary size and, per hash, the set
+    of bit positions mod ``MAX_BITS``. Every geometry is a power of two
+    ≤ ``MAX_BITS``, so ``p mod m == (p mod MAX_BITS) mod m``: the
+    positions are exact for whichever ``m`` the vocabulary size picks.
+    :func:`observed_bloom` reads them back."""
+    h1 = poly_hash(term, *_H1[:2], _H1[2], _H1[3])
+    h2 = poly_hash(term, *_H2[:2], _H2[2], _H2[3])
+    return [F.count(term).alias(f"{tag}_n")] + [
+        F.collect_set(((h1 + i * h2) % MAX_BITS).cast("int")).alias(f"{tag}_p{i}")
+        for i in range(K_HASHES)
+    ]
+
+
+def observed_bloom(row, tag: str) -> dict | None:
+    """The bloom :func:`token_bloom_aggs` described under *tag*:
+    ``{"m": bits, "k": hashes, "b64": bitset}`` sized from the
+    vocabulary (~10 bits/token, a power of two in [MIN_BITS,
+    MAX_BITS]), or None (no tokens / vocabulary over cap)."""
+    n = row[f"{tag}_n"]
     if n == 0 or n > MAX_VOCAB:
         return None
     m = min(MAX_BITS, max(MIN_BITS, _next_pow2(n * BITS_PER_TOKEN)))
-    h1 = poly_hash(F.col("t"), *_H1[:2], _H1[2], _H1[3])
-    h2 = poly_hash(F.col("t"), *_H2[:2], _H2[2], _H2[3])
-    pos = toks.select(
-        F.explode(
-            F.array(*[((h1 + i * h2) % m).cast("int") for i in range(K_HASHES)])
-        ).alias("p")
-    ).agg(F.collect_set("p").alias("ps"))
-    positions = pos.collect()[0]["ps"]
     bits = bytearray(m // 8)
-    for p in positions:
-        bits[p >> 3] |= 1 << (p & 7)
+    for i in range(K_HASHES):
+        for p in row[f"{tag}_p{i}"]:
+            p %= m
+            bits[p >> 3] |= 1 << (p & 7)
     return {"m": m, "k": K_HASHES, "b64": base64.b64encode(bytes(bits)).decode()}
 
 
@@ -142,8 +161,9 @@ def bloom_might_contain(bloom: dict, token: str) -> bool:
 
 
 def merge_blooms(blooms: list[dict | None]) -> dict | None:
-    """Union of same-geometry blooms by bitwise OR; None when any
-    input lacks a bloom or geometries differ (conservative)."""
+    """Union of same-geometry blooms by bitwise OR (array text fields
+    at merge); None when any input lacks a bloom or geometries differ
+    (conservative)."""
     if not blooms or any(b is None for b in blooms):
         return None
     m, k = blooms[0]["m"], blooms[0]["k"]

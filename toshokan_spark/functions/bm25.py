@@ -145,43 +145,46 @@ def segment_field_stats(df: DataFrame, fields: list[tuple[str, str]]) -> DataFra
     (null text contributes no dl, as there), ``df = #docs whose token
     array contains the term``.
 
+    One pass for every field: each document emits one row per
+    (field, distinct token) plus one NULL-term row per field carrying
+    its length, and a single ``groupBy(field, term)`` counts them.
+    Tokens come from the ingest-time ``__tokens__<field>`` shadow
+    column when the segment has one (no re-tokenizing); the output
+    rows hold each field's distinct tokens once, which is what the
+    token blooms are observed from (``functions/bloom.py``).
+
     *fields* is ``[(name, tokenizer), ...]`` for the scalar text
     fields; returns None when empty.
     """
-    frames = []
-    for name, tok in fields:
-        toks = tokenize(F.col(name), tok)
-        proj = df.select(
-            F.array_distinct(toks).alias("__t"), F.size(toks).alias("__dl")
-        )
-        summary = proj.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("__dl").alias("sum_dl")
-        ).select(
-            F.lit(name).alias("field"),
-            F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("long").alias("df"),
-            F.col("n_docs"),
-            F.col("sum_dl"),
-        )
-        per_term = (
-            proj.select(F.explode("__t").alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .select(
-                F.lit(name).alias("field"),
-                F.col("term"),
-                F.col("df"),
-                F.lit(None).cast("long").alias("n_docs"),
-                F.lit(None).cast("long").alias("sum_dl"),
-            )
-        )
-        frames.append(summary.unionAll(per_term))
-    if not frames:
+    from toshokan_spark.ingest import tokens_col
+
+    if not fields:
         return None
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionAll(fr)
-    return out
+    rows = []
+    for name, tok in fields:
+        shadow = tokens_col(name)
+        toks = F.col(shadow) if shadow in df.columns else tokenize(F.col(name), tok)
+        field = F.lit(name).alias("field")
+        rows.append(F.array(F.struct(
+            field, F.lit(None).cast("string").alias("term"), F.size(toks).alias("dl")
+        )))
+        rows.append(F.transform(
+            F.coalesce(F.array_distinct(toks), F.array().cast("array<string>")),
+            lambda t: F.struct(field, t.alias("term"), F.lit(None).cast("int").alias("dl")),
+        ))
+    summary = F.col("term").isNull()
+    return (
+        df.select(F.inline(F.concat(*rows)))
+        .groupBy("field", "term")
+        .agg(F.count(F.lit(1)).alias("__c"), F.sum("dl").alias("__dl"))
+        .select(
+            "field",
+            "term",
+            F.when(~summary, F.col("__c")).alias("df"),
+            F.when(summary, F.col("__c")).alias("n_docs"),
+            F.when(summary, F.col("__dl")).alias("sum_dl"),
+        )
+    )
 
 
 def merged_stats_provider(spark, stats_paths: list[str], score_field: str):

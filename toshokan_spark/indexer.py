@@ -97,22 +97,101 @@ def stats_path(config: IndexConfig, seg_name: str) -> str:
     return join_path(config.path, STATS_DIR, seg_name)
 
 
-def write_segment_stats(config: IndexConfig, seg_name: str, written: DataFrame) -> None:
+#: the sidecar's fixed schema (``bm25.segment_field_stats``): merges
+#: read their inputs' sidecars with it instead of inferring it
+STATS_SCHEMA = "field string, term string, df long, n_docs long, sum_dl long"
+
+
+def _write_stats(
+    config: IndexConfig, seg_name: str, stats: DataFrame, fields
+) -> "tuple[dict, dict]":
+    """Write a ``_stats`` sidecar as one file sorted by (field, term) —
+    its bytes then do not depend on shuffle order, and ``term``
+    row-group min/max serve scored search's term pushdown — and
+    observe on that same write, per field, the summed ``n_docs`` and
+    (tokenized scalar fields) the token bloom over its term rows,
+    which are exactly the field's distinct tokens. Returns
+    ``(n_docs by field, token blooms by field)``."""
+    from pyspark.sql import Observation
+
+    from toshokan_spark.functions.bloom import observed_bloom, token_bloom_aggs
+
+    field, term = F.col("field"), F.col("term")
+    tokenized = [i for i, (_, tok) in enumerate(fields) if tok != "raw"]
+    aggs = []
+    for i, (name, _) in enumerate(fields):
+        this = field == F.lit(name)
+        aggs.append(F.sum(F.when(this & term.isNull(), F.col("n_docs"))).alias(f"__n{i}"))
+        if i in tokenized:
+            aggs += token_bloom_aggs(F.when(this, term), f"__b{i}")
+    obs = Observation()
+    (
+        stats.observe(obs, *aggs)
+        .coalesce(1)
+        .sortWithinPartitions("field", "term")
+        .write.mode("overwrite")
+        .parquet(stats_path(config, seg_name))
+    )
+    r = obs.get
+    n_docs = {name: r[f"__n{i}"] for i, (name, _) in enumerate(fields)}
+    blooms = {fields[i][0]: observed_bloom(r, f"__b{i}") for i in tokenized}
+    return n_docs, {n: b for n, b in blooms.items() if b is not None}
+
+
+def write_segment_stats(config: IndexConfig, seg_name: str, written: DataFrame) -> dict:
     """Compute + write the segment's BM25 corpus stats (see
-    `functions/bm25.py:segment_field_stats`): one extra pass over the
-    segment's text columns at write time buys scored search a
-    metadata-sized stats read instead of a per-query full-corpus
-    tokenize+agg — the pay-once-at-commit trade every index format
+    `functions/bm25.py:segment_field_stats`) and return the scalar
+    text fields' token blooms, observed on that write: one
+    aggregation over the segment's token shadow columns at write time
+    buys scored search a metadata-sized stats read instead of a
+    per-query full-corpus tokenize+agg, and term queries manifest-level
+    segment skipping — the pay-once-at-commit trade every index format
     makes (the reference's tantivy segments store term dictionaries
     for the same reason)."""
     from toshokan_spark.functions.bm25 import segment_field_stats
 
     fields = [(n, t) for n, t in text_stat_fields(config) if n in written.columns]
-    stats = segment_field_stats(written, fields) if fields else None
-    if stats is not None:
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            stats_path(config, seg_name)
-        )
+    if not fields:
+        return {}
+    return _write_stats(config, seg_name, segment_field_stats(written, fields), fields)[1]
+
+
+def write_summed_stats(
+    spark: SparkSession,
+    catalog: FsCatalog,
+    config: IndexConfig,
+    seg_name: str,
+    input_names: "list[str]",
+    num_rows: int,
+    columns,
+) -> "dict | None":
+    """A delete-free merge's sidecar: the (field, term) sums of its
+    inputs' sidecars — integer counts, so exactly what a recompute
+    from the merged data gives, with no tokenizing — and the token
+    blooms observed on that write, as :func:`write_segment_stats`
+    returns them. None when the sum is not provably exact: an input
+    without a sidecar, or a field whose summed ``n_docs`` is not the
+    merged row count (a field added by ``alter`` after some inputs
+    were written); the caller then recomputes from the merged data,
+    which overwrites whatever was written here."""
+    fields = [(n, t) for n, t in text_stat_fields(config) if n in columns]
+    if not fields:
+        return {}
+    st = catalog.data_storage(config)
+    paths = [stats_path(config, n) for n in input_names]
+    if not all(st.exists(p) for p in paths):
+        return None
+    summed = (
+        spark.read.schema(STATS_SCHEMA)
+        .parquet(*paths)
+        .where(F.col("field").isin([n for n, _ in fields]))
+        .groupBy("field", "term")
+        .agg(*[F.sum(c).alias(c) for c in ("df", "n_docs", "sum_dl")])
+    )
+    n_docs, blooms = _write_stats(config, seg_name, summed, fields)
+    if any(n_docs[n] != num_rows for n, _ in fields):
+        return None
+    return blooms
 
 
 def index_batch(
@@ -275,33 +354,29 @@ def build_segment(
     } or None
 
     # stats are derived data: write them BEFORE the manifest commit so
-    # a manifested segment always has its stats sibling
-    written = df.sparkSession.read.parquet(seg_path)
-    write_segment_stats(config, seg_name, written)
+    # a manifested segment always has its stats sibling. The read-back
+    # takes the written frame's schema (no footer-inference job).
+    written = df.sparkSession.read.schema(df.schema).parquet(seg_path)
+    # token Bloom filters for TOKENIZED text fields — the term-query
+    # analog of the zone maps above (raw scalars already have string
+    # zone maps): the scalar fields' blooms are observed on the BM25
+    # sidecar write, whose term rows are the distinct tokens
+    # (functions/bloom.py has the sizing/caps/conservatism story)
+    token_blooms = write_segment_stats(config, seg_name, written)
 
     # fixed-width histogram stats for configured number fields — the
     # distribution twin of field_sums (manifest-only match-all
     # histogram panels); exact counts, additive across merges
     field_histograms = compute_field_histograms(config, written)
 
-    # token Bloom filters for TOKENIZED text fields — the term-query
-    # analog of the zone maps above (raw fields already have string
-    # zone maps): one tokenize+distinct job per field at commit buys
-    # manifest-level segment skipping for every future term query
-    # (functions/bloom.py has the sizing/caps/conservatism story)
+    # array text fields have no sidecar: one tokenize+distinct job
+    # each. Raw ARRAYS are included — they had no pruning tier at all
+    # (zone maps skip arrays), and a raw term is its own token
     from toshokan_spark.functions.bloom import build_token_bloom
 
-    # eligible: every text field EXCEPT scalar raw (those have string
-    # zone maps); raw ARRAYS are included — they had no pruning tier
-    # at all (zone maps skip arrays), and a raw term is its own token
-    token_blooms: dict = {}
     for f in config.fields:
-        if (
-            f.type == "text"
-            and (f.tokenizer != "raw" or f.array)
-            and f.name in written.columns
-        ):
-            b = build_token_bloom(written, f.name, f.tokenizer, is_array=f.array)
+        if f.type == "text" and f.array and f.name in written.columns:
+            b = build_token_bloom(written, f.name, f.tokenizer, is_array=True)
             if b is not None:
                 token_blooms[f.name] = b
 
@@ -327,8 +402,8 @@ def compute_field_histograms(config, df) -> "dict | None":
     distribution stats (`catalog.SegmentEntry.field_histograms`).
 
     One bucket-count-sized groupBy+collect per configured field at
-    commit/merge time (same cost class as the token blooms); the
-    bucket expression is byte-identical to
+    commit/merge time (same cost class as an array field's token
+    bloom); the bucket expression is byte-identical to
     ``search.histogram_agg``'s, so the manifest-served panel is
     value-identical to the scan-served one by construction. Bin keys
     serialize as ``repr(float)`` — an exact round-trip through the

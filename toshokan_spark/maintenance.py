@@ -159,7 +159,7 @@ def merge_segments(
 
     obs_row = None
     if n_obs is not None:
-        # the write already ran (stats recompute below reads it back);
+        # the write already ran (stats below may read it back);
         # the observation holds the SURVIVOR count + additive stats
         obs_row = n_obs.get
         total = int(obs_row["__n"])
@@ -251,17 +251,24 @@ def merge_segments(
             ]
             for n in names
         } or None
+    from toshokan_spark.functions.bloom import merge_blooms
+    from toshokan_spark.indexer import (
+        compute_field_histograms,
+        stats_path,
+        write_segment_stats,
+        write_summed_stats,
+    )
+
+    # the merged data, for whatever recomputes from it, read back with
+    # the schema it was written with (no footer-inference job)
+    written = spark.read.schema(df.schema).parquet(seg_path)
     # histogram stats: additive bin combine when every input recorded
     # the field at the SAME width; a delete-materializing merge
     # re-records from the survivors (the field_sums rule — commit-time
     # bins count rows the rewrite dropped)
-    from toshokan_spark.indexer import compute_field_histograms
-
     field_histograms = None
     if deletes:
-        field_histograms = compute_field_histograms(
-            config, spark.read.parquet(seg_path)
-        )
+        field_histograms = compute_field_histograms(config, written)
     elif all(s.field_histograms for s in segs):
         names = set(segs[0].field_histograms)
         for s in segs[1:]:
@@ -278,33 +285,36 @@ def merge_segments(
             combined[n] = {"w": widths.pop(), "bins": bins}
         field_histograms = combined or None
 
-    # recompute the merged segment's BM25 stats before it is
-    # manifested (stats follow data through compaction)
-    from toshokan_spark.indexer import stats_path, write_segment_stats
-
-    write_segment_stats(config, seg_name, spark.read.parquet(seg_path))
-
-    # token blooms union by bitwise OR when every input recorded the
-    # field with the same geometry; otherwise the merged segment drops
-    # the bloom (conservative — no bloom means no pruning, never a
-    # wrong prune). No data reread either way.
-    from toshokan_spark.functions.bloom import merge_blooms
-
+    # BM25 stats follow data through compaction, written before the
+    # merged segment is manifested. A delete-free merge sums its
+    # inputs' sidecars (integer counts: exact, no tokenizing) and
+    # observes the merged scalar-field blooms on that write — exact
+    # whatever the inputs' bloom geometries. Pending deletes, or a sum
+    # not proven exact (missing sidecar, field added by alter),
+    # recompute both from the merged data in one pass.
     token_blooms = None
-    if all(s.token_blooms for s in segs):
-        names = set(segs[0].token_blooms)
-        for s in segs[1:]:
-            names &= set(s.token_blooms)
-        merged = {
-            n: merge_blooms([s.token_blooms[n] for s in segs]) for n in names
-        }
-        token_blooms = {n: b for n, b in merged.items() if b is not None} or None
+    if not deletes:
+        token_blooms = write_summed_stats(
+            spark, catalog, config, seg_name, [s.file_name for s in segs],
+            total, set(df.columns),
+        )
+    if token_blooms is None:
+        token_blooms = write_segment_stats(config, seg_name, written)
+    # array text fields have no sidecar: their blooms union by bitwise
+    # OR when every input recorded one with the same geometry, and drop
+    # otherwise (conservative — no bloom means no pruning, never a
+    # wrong prune)
+    for f in config.fields:
+        if f.type == "text" and f.array:
+            b = merge_blooms([(s.token_blooms or {}).get(f.name) for s in segs])
+            if b is not None:
+                token_blooms[f.name] = b
 
     entry = SegmentEntry(
         id=seg_id, file_name=seg_name, num_rows=total,
         created_at_ms=int(time.time() * 1000),
         min_day=min_day, max_day=max_day, field_stats=field_stats,
-        token_blooms=token_blooms, field_sums=field_sums,
+        token_blooms=token_blooms or None, field_sums=field_sums,
         field_histograms=field_histograms,
     )
     # one atomic manifest write: new in, old out (`merge.rs:63-66`);
